@@ -315,7 +315,7 @@ object Bench {
       // docTokens posting it warms; x02 builds the MinHash band frame
       // (sharedBands) on top of x04's shingle posting; x29 runs the
       // dup-closure loop to convergence and memoizes the labels
-      // (closureMemo); x82 fits+caches the quality-model feature frame
+      // (the "closure" memo); x82 fits+caches the quality-model feature frame
       // on the already-warm docTokens; x144 builds the session-shared
       // all-pairs bitext margin truth frame (independent of x145's ANN
       // artifact — the exact leg shares nothing with the index).
@@ -438,12 +438,27 @@ object Bench {
   private[graft] def jsonNum(v: Double): String =
     if (java.lang.Double.isFinite(v)) v.toString else "-1.0"
 
+  /** JSON string: quoted, with backslash, quote and ALL control chars
+    * (< 0x20) escaped — a tab or CR in an oracle SQL string, or a quote
+    * in a query key or path, would otherwise make a reader's json.load
+    * fail.
+    */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   private[graft] def jsonMap(m: Seq[(String, Double)]): String =
-    m.map { case (k, v) => "\"" + k + "\":" + jsonNum(v) }
+    m.map { case (k, v) => jsonStr(k) + ":" + jsonNum(v) }
       .mkString("{", ",", "}")
 
   private[graft] def jsonArr(xs: Seq[String]): String =
-    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    xs.map(jsonStr).mkString("[", ",", "]")
 
   /** The ONE-LINE artifact, assembled purely so BenchGateSpec can
     * round-trip a full-sized (181-query) line through a strict JSON
@@ -463,7 +478,7 @@ object Bench {
       coldCpu: Seq[(String, Double)], contended: Boolean): String =
     s"""{"metric":"total","value":${jsonNum(total)},"unit":"sec",""" +
       s""""queries":${jsonMap(queries)},"failed":${jsonArr(failed)},""" +
-      s""""sf":"$sfDir","runs_per_query":$runs,""" +
+      s""""sf":${jsonStr(sfDir)},"runs_per_query":$runs,""" +
       s""""loadavg_start":${jsonNum(loadStart)},"loadavg_end":${jsonNum(loadEnd)},""" +
       s""""steal_pct":${jsonNum(math.rint(stealPct * 100) / 100)},""" +
       s""""ledger_queries":$ledgerQueries,""" +
@@ -472,7 +487,7 @@ object Bench {
       s""""cpu_median_ledger_ratio":${jsonNum(math.rint(cpuMedianRatio * 1000) / 1000)},""" +
       s""""retried":${jsonArr(retried)},"suspect":${jsonArr(suspect)},""" +
       s""""watch":${jsonArr(watch)},"family_watch":${jsonArr(familyWatch)},""" +
-      s""""epoch_verdict":"$epochVerdict","bracket":$bracketJson,""" +
+      s""""epoch_verdict":${jsonStr(epochVerdict)},"bracket":$bracketJson,""" +
       s""""cold":${jsonMap(cold)},"cold_watch":${jsonArr(coldWatch)},""" +
       s""""cpu":${jsonMap(cpu)},"cold_cpu":${jsonMap(coldCpu)},""" +
       s""""contended":$contended}"""

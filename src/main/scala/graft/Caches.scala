@@ -4,28 +4,70 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.storage.StorageLevel
 
-/** Registry for the session-lifetime shared caches (docTokens,
-  * docShingles, the x04 verified-pair set, x51's 8-gram posting — see
-  * SCALE.md §caching). The caches themselves are ordinary
-  * `DataFrame.persist` entries deduped by Spark's CacheManager; what was
-  * missing (round-3 ADVICE, round-4 verdict #5) is a RELEASE hook: in a
-  * long-lived server that touches many datasets, every dataset pins its
-  * posting tables forever. `clear(sfDir)` unpersists exactly the frames
-  * whose plans read from that dataset's files, so one dataset can be
-  * evicted without disturbing the others' warm caches.
+/** The one registry for session-lifetime state, in two halves.
   *
-  * Keyed by canonicalized logical plan, mirroring CacheManager's own
-  * dedup: re-persisting an equivalent plan (every x04 call re-creates
-  * the frame) registers one entry, not one per call.
+  * Shared caches (docTokens, docShingles, the x04 verified-pair set,
+  * x51's 8-gram posting — see SCALE.md §caching) are ordinary
+  * `DataFrame.persist` entries, registered by canonicalized logical
+  * plan to mirror CacheManager's own dedup: re-persisting an equivalent
+  * plan (every x04 call re-creates the frame) registers one entry, not
+  * one per call.
+  *
+  * Session memos (built ANN/BM25 indexes, loaded published artifacts,
+  * the corpus BPE and closure checkpoints) go through [[memo]]: one map
+  * keyed on (session id, normalized dataset path, kind, params), each
+  * entry carrying the `release` that frees what its value holds. A memo
+  * is bound to the session that built it, so a later session in the
+  * same JVM rebuilds instead of reading a dead session's frames.
+  *
+  * Release rule: `clear(sfDir)` drops every memo under that dataset and
+  * runs its `release`, then unpersists every registered cache whose
+  * plan reads the dataset's files — so a long-lived server evicts one
+  * dataset without disturbing the others' warm state, and no memo can
+  * outlive the frames it serves. `clearAll()` does the same for
+  * everything.
   */
 object Caches {
 
   private val reg = new ConcurrentHashMap[LogicalPlan, DataFrame]()
+
+  /** A memo entry: the value is built once under the entry's own lock
+    * (not the map's), so a build may memo its own dependencies.
+    */
+  private final class Memo(build: () => Any, val release: Any => Unit) {
+    lazy val value: Any = build()
+  }
+
+  /** (session id, normalized dataset path, kind, params) → memo. */
+  private val memos = new ConcurrentHashMap[(String, String, String, Any), Memo]()
+
+  /** The session's value for (`sfDir`, `kind`, `params`): built once by
+    * `build`, freed by `release` when [[clear]] or [[clearAll]] drops
+    * it. `release` must free everything the value holds that the
+    * plan-keyed registry cannot find by file lineage (a checkpoint, a
+    * frame persisted outside [[persist]], a loaded artifact's frames).
+    * A failed build leaves no entry behind.
+    */
+  def memo[V](spark: SparkSession, kind: String, sfDir: String, params: Any = ())
+      (build: => V)(release: V => Unit): V = {
+    val key = (org.apache.spark.sql.graftshim.SessionShim.id(spark),
+      normalizePath(sfDir), kind, params)
+    val m = memos.computeIfAbsent(key,
+      _ => new Memo(() => build, release.asInstanceOf[Any => Unit]))
+    try m.value.asInstanceOf[V]
+    catch { case e: Throwable => memos.remove(key, m); throw e }
+  }
+
+  /** How many memos of `kind` exist for a dataset, across sessions. */
+  private[graft] def memoized(sfDir: String, kind: String): Int = {
+    val d = normalizePath(sfDir)
+    memos.keySet().asScala.count(k => k._2 == d && k._3 == kind)
+  }
 
   /** Persist `df` (MEMORY_AND_DISK — degrades to spill, not OOM) and
     * register it for targeted release. Returns the REGISTERED frame:
@@ -74,19 +116,19 @@ object Caches {
     }.flatten.distinct
 
   /** Scheme-less, trailing-slash-free form of a dataset path — the
-    * normalization `clear(sfDir)` matches against; memo keys derived
-    * from sfDir (closureMemo) must use the same form or a relative /
-    * trailing-slash variant leaks past the release hook (round-17
-    * ADVICE).
+    * form both halves of the registry key and match on, so a relative /
+    * trailing-slash variant cannot leak past [[clear]].
     */
   private[graft] def normalizePath(dir: String): String =
     new org.apache.hadoop.fs.Path(dir).toUri.getPath.stripSuffix("/")
 
-  private def normalize(dir: String): String = normalizePath(dir)
+  /** Whether normalized `path` is the dataset `dir` or lies under it. */
+  private def under(path: String, dir: String): Boolean =
+    path == dir || path.startsWith(dir + "/")
 
   private def readsFrom(df: DataFrame, dir: String): Boolean = {
-    val d = normalize(dir)
-    sourceRoots(df).exists(r => r == d || r.startsWith(d + "/"))
+    val d = normalizePath(dir)
+    sourceRoots(df).exists(under(_, d))
   }
 
   /** Whether an equivalent plan is already registered — lets a
@@ -102,43 +144,33 @@ object Caches {
   def registered(sfDir: String): Seq[DataFrame] =
     reg.values().asScala.toSeq.filter(readsFrom(_, sfDir))
 
-  /** Unpersist (blocking) every registered cache reading from `sfDir`
-    * and drop the dataset's memoized IVF indexes. Returns the number of
-    * cache entries released. Safe to call while other datasets' caches
-    * are live; safe to re-run the queries afterwards (they transparently
-    * rebuild their caches on next use).
+  /** Drop every memo under `sfDir` and run its release, then unpersist
+    * (blocking) every registered cache reading from `sfDir`. Returns the
+    * number of entries released. Safe to call while other datasets'
+    * caches are live; safe to re-run the queries afterwards (they
+    * transparently rebuild on next use).
     */
   def clear(sfDir: String): Int = {
-    val hit = reg.entrySet().asScala.toSeq
-      .filter(e => readsFrom(e.getValue, sfDir))
-    hit.foreach { e =>
-      e.getValue.unpersist(blocking = true)
-      reg.remove(e.getKey)
-    }
-    graft.ml.IvfIndex.clear(sfDir)
-    graft.ml.IvfPq.clear(sfDir)
-    graft.ml.Bm25Index.clear(sfDir)
-    graft.ml.Whiten.clear(sfDir)
-    graft.ml.WhitenedIvf.clear(sfDir)
-    graft.ml.BitextAnn.clear(sfDir)
-    graft.queries.ExtensionQueries.clearBpe(sfDir)
-    graft.queries.ExtensionQueries.clearClosure(sfDir)
-    hit.size
+    val d = normalizePath(sfDir)
+    release(memos.keySet().asScala.toList.filter(k => under(k._2, d)),
+      reg.entrySet().asScala.toList.filter(e => readsFrom(e.getValue, sfDir))
+        .map(_.getKey))
   }
 
-  /** Release everything: all registered caches and all IVF indexes. */
-  def clearAll(): Int = {
-    val n = reg.size()
-    reg.values().asScala.foreach(_.unpersist(blocking = true))
-    reg.clear()
-    graft.ml.IvfIndex.clear()
-    graft.ml.IvfPq.clear()
-    graft.ml.Bm25Index.clear()
-    graft.ml.Whiten.clear(null)
-    graft.ml.WhitenedIvf.clear(null)
-    graft.ml.BitextAnn.clear(null)
-    graft.queries.ExtensionQueries.clearBpe(null)
-    graft.queries.ExtensionQueries.clearClosure(null)
-    n
+  /** Release everything: every memo and every registered cache. */
+  def clearAll(): Int =
+    release(memos.keySet().asScala.toList, reg.keySet().asScala.toList)
+
+  /** Memos go first, so nothing can serve a frame being released. A
+    * memo whose build is still running is released once it lands; one
+    * whose build fails holds nothing to release.
+    */
+  private def release(memoKeys: Seq[(String, String, String, Any)],
+      plans: Seq[LogicalPlan]): Int = {
+    val dropped = memoKeys.flatMap(k => Option(memos.remove(k)))
+    dropped.foreach(m => scala.util.Try(m.value).foreach(m.release))
+    val freed = plans.flatMap(p => Option(reg.remove(p)))
+    freed.foreach(_.unpersist(blocking = true))
+    dropped.size + freed.size
   }
 }

@@ -1,7 +1,5 @@
 package graft.ml
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,10 +68,6 @@ object Bm25Index {
     def byDoc: DataFrame = forward.getOrElse(posting)
   }
 
-  private val cache = new ConcurrentHashMap[(Int, String), Index]()
-  private val published = new ConcurrentHashMap[(Int, String), Index]()
-  private val publishedOf = new ConcurrentHashMap[(Int, String, String), Index]()
-
   /** Cross-engine deterministic rounding (ReferenceQueries.round). */
   private def round6(c: org.apache.spark.sql.Column) =
     floor(c * 1e6 + lit(0.5)) / 1e6
@@ -109,7 +103,7 @@ object Bm25Index {
     * repeated searches (and both bench passes) pay the tokenize once.
     */
   def build(spark: SparkSession, sfDir: String): Index =
-    cache.computeIfAbsent((System.identityHashCode(spark), sfDir), _ => {
+    graft.Caches.memo(spark, "bm25", sfDir) {
       // persistShared: the corpus (doc_id, token) projection is THE
       // session-shared working set (SCALE.md §caches) — the build
       // rides the same materialization x91/x09/x52 read
@@ -117,7 +111,7 @@ object Bm25Index {
         persistShared = true)
       Index(graft.Caches.persist(ix.posting), graft.Caches.persist(ix.df),
         ix.consts)
-    })
+    }(_ => ()) // its frames read sfDir: the registry releases them by lineage
 
   /** Publish the triple as one atomic versioned snapshot. The posting
     * goes out clustered by token (see object doc) so a loaded scan
@@ -129,32 +123,22 @@ object Bm25Index {
     * stored-fields/postings split.
     */
   def saveIndex(spark: SparkSession, ix: Index, root: String): Long =
-    graft.sources.VersionedStore.publishAll(
-      Map(
-        "posting" -> ix.posting.repartition(col("token"))
-          .sortWithinPartitions("token"),
-        "forward" -> forwardOf(ix.posting),
-        "df" -> ix.df,
-        "consts" -> ix.consts),
-      root)
+    graft.sources.VersionedStore.publishAll(tablesOf(ix), root)
+
+  private def tablesOf(ix: Index): Map[String, DataFrame] = Map(
+    "posting" -> ix.posting.repartition(col("token"))
+      .sortWithinPartitions("token"),
+    "forward" -> forwardOf(ix.posting),
+    "df" -> ix.df,
+    "consts" -> ix.consts)
 
   /** [[saveIndex]] plus a `meta` table carrying the source table's
-    * filesystem fingerprint — what [[loadOrPublish]] validates.
+    * filesystem fingerprint `want` — what [[loadOrPublish]] validates.
     */
-  def save(spark: SparkSession, sfDir: String, root: String): Long = {
-    import spark.implicits._
-    val ix = build(spark, sfDir)
-    graft.sources.VersionedStore.publishAll(
-      Map(
-        "posting" -> ix.posting.repartition(col("token"))
-          .sortWithinPartitions("token"),
-        "forward" -> forwardOf(ix.posting),
-        "df" -> ix.df,
-        "consts" -> ix.consts,
-        "meta" -> Seq(graft.Tables.fileFingerprint(spark, sfDir, "documents"))
-          .toDF("fingerprint")),
-      root)
-  }
+  private def saveWithMeta(spark: SparkSession, ix: Index, want: String,
+      root: String): Long =
+    graft.sources.VersionedStore.publishAll(tablesOf(ix) +
+      ("meta" -> graft.sources.VersionedStore.metaTable(spark, want)), root)
 
   /** Load a published index (latest snapshot, or a pinned `version`).
     * No tokenize, no corpus scan — a fresh session searches
@@ -185,22 +169,7 @@ object Bm25Index {
     * (round-11 review). Any load/validate failure also republishes.
     */
   def loadOrPublish(spark: SparkSession, sfDir: String): Index =
-    published.computeIfAbsent((System.identityHashCode(spark), sfDir), _ => {
-      val root = artifactRoot("bm25", sfDir)
-      val want = graft.Tables.fileFingerprint(spark, sfDir, "documents")
-      val fresh =
-        try graft.sources.VersionedStore.latestVersion(root).exists(
-          graft.sources.VersionedStore.metaMatches(spark, root, _, want))
-        catch { case _: Exception => false }
-      if (!fresh)
-        // adoption re-verifies the rival snapshot against OUR source
-        // fingerprint — a rival built from different source state is
-        // never silently served (round-12 advice)
-        graft.sources.VersionedStore.publishOrAdopt(root,
-          graft.sources.VersionedStore.metaMatches(spark, root, _, want))(
-          save(spark, sfDir, root))
-      load(spark, root)
-    })
+    published(spark, sfDir, "bm25")(build(spark, sfDir))
 
   /** [[loadOrPublish]] for a DERIVED corpus — e.g. x123's passages as
     * pseudo-docs — under its own artifact `kind`: the caller supplies
@@ -214,33 +183,28 @@ object Bm25Index {
     */
   def loadOrPublishOf(spark: SparkSession, sfDir: String, kind: String,
       docs: => DataFrame): Index =
-    publishedOf.computeIfAbsent(
-      (System.identityHashCode(spark), sfDir, kind), _ => {
-        import spark.implicits._
-        val root = artifactRoot(kind, sfDir)
-        val want = graft.Tables.fileFingerprint(spark, sfDir, "documents")
-        val fresh =
-          try graft.sources.VersionedStore.latestVersion(root).exists(
-            graft.sources.VersionedStore.metaMatches(spark, root, _, want))
-          catch { case _: Exception => false }
-        if (!fresh) {
-          graft.sources.VersionedStore.publishOrAdopt(root,
-            graft.sources.VersionedStore.metaMatches(spark, root, _, want)) {
-            val ix = buildOf(docs)
-            graft.sources.VersionedStore.publishAll(
-              Map(
-                "posting" -> ix.posting.repartition(col("token"))
-                  .sortWithinPartitions("token"),
-                "forward" -> forwardOf(ix.posting),
-                "df" -> ix.df,
-                "consts" -> ix.consts,
-                "meta" -> Seq(want).toDF("fingerprint")),
-              root)
-          }
-          ()
-        }
-        load(spark, root)
-      })
+    published(spark, sfDir, kind)(buildOf(docs))
+
+  private def published(spark: SparkSession, sfDir: String, kind: String)
+      (ix: => Index): Index =
+    artifactMemo(spark, sfDir, kind,
+      graft.Tables.fileFingerprint(spark, sfDir, "documents"))(
+      (root, want) => saveWithMeta(spark, ix, want, root))(load(spark, _))
+
+  /** The session memo of the `kind` artifact over a dataset, for
+    * every loadOrPublish: serve the published version whose `meta`
+    * records `want` (else `publish(root, want)` it), loaded through
+    * `load(root)`; dropping the memo releases what the load persisted.
+    */
+  private[ml] def artifactMemo[V](spark: SparkSession, sfDir: String,
+      kind: String, want: => String)(publish: (String, String) => Long)
+      (load: String => V): V = {
+    val root = artifactRoot(kind, sfDir)
+    graft.Caches.memo(spark, kind + ".published", sfDir) {
+      val w = want
+      graft.sources.VersionedStore.loadFresh(spark, root, w)(publish(root, w))(load(root))
+    }(_ => graft.Caches.clear(root))
+  }
 
   /** Every per-dataset artifact kind the harnesses must delete for a
     * deterministic cold probe (Bench and ScaleBlowup share this ONE
@@ -260,7 +224,7 @@ object Bm25Index {
 
   /** Canonical per-dataset artifact root under the JVM temp dir. */
   private[graft] def artifactRoot(kind: String, sfDir: String): String = {
-    val key = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
+    val key = graft.Caches.normalizePath(sfDir).replaceAll("[^A-Za-z0-9._-]", "_")
     s"${sys.props("java.io.tmpdir")}/graft-artifacts/$kind/$key"
   }
 
@@ -389,28 +353,5 @@ object Bm25Index {
         (sum(col("sum_dl")).cast("double") /
           sum(col("n_dl_docs")).cast("double")).as("avgdl"))
     Index(posting, df, consts)
-  }
-
-  /** Drop memoized indexes (frames persist through Caches, which owns
-    * their release).
-    */
-  def clear(): Unit = {
-    cache.clear(); published.clear(); publishedOf.clear()
-  }
-
-  /** Drop only the indexes memoized for one dataset — wired into
-    * [[graft.Caches.clear]] so a cache eviction can't leave a memo
-    * serving unpersisted frames (which would silently revert every
-    * BM25 query to a per-query corpus tokenize for the session —
-    * round-11 review finding).
-    */
-  def clear(sfDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    cache.keySet().asScala.filter(_._2 == sfDir).toList
-      .foreach(cache.remove)
-    published.keySet().asScala.filter(_._2 == sfDir).toList
-      .foreach(published.remove)
-    publishedOf.keySet().asScala.filter(_._2 == sfDir).toList
-      .foreach(publishedOf.remove)
   }
 }

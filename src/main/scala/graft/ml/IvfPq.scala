@@ -1,7 +1,5 @@
 package graft.ml
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -47,8 +45,6 @@ object IvfPq {
   final case class Index(coded: DataFrame, centroids: DataFrame,
       codebooks: Array[Array[Array[Double]]], m: Int, dsub: Int)
 
-  private val cache = new ConcurrentHashMap[(Int, String, Int, Int), Index]()
-
   private def embOf(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), VecMath.asDouble(col("embedding")).as("v"))
@@ -60,11 +56,10 @@ object IvfPq {
     * bench passes and repeated searches hit one materialization).
     */
   def build(spark: SparkSession, sfDir: String,
-      m: Int = 16, ksub: Int = 16): Index = {
-    val key = (System.identityHashCode(spark), sfDir, m, ksub)
-    cache.computeIfAbsent(key, _ =>
-      encodeWith(IvfIndex.build(spark, sfDir), embOf(spark, sfDir), m, ksub))
-  }
+      m: Int = 16, ksub: Int = 16): Index =
+    // the coded frame reads sfDir, so the registry releases it by lineage
+    graft.Caches.memo(spark, "ivfpq", sfDir, (m, ksub))(
+      encodeWith(IvfIndex.build(spark, sfDir), embOf(spark, sfDir), m, ksub))(_ => ())
 
   /** Build over an EXPLICIT (vec_id, v) frame with its own coarse
     * quantizer — the space-agnostic entry the stream-maintained index
@@ -152,16 +147,10 @@ object IvfPq {
     * fingerprint (what [[loadOrPublish]] validates).
     */
   def save(spark: SparkSession, sfDir: String, root: String,
-      m: Int = 16, ksub: Int = 16): Long = {
-    import spark.implicits._
-    val ix = build(spark, sfDir, m, ksub)
-    graft.sources.VersionedStore.publishAll(
-      Map("coded" -> ix.coded, "centroids" -> ix.centroids,
-        "codebooks" -> PqIndex.codebooksTable(spark, ix.codebooks),
-        "meta" -> Seq(graft.Tables.fileFingerprint(spark, sfDir, "embeddings"))
-          .toDF("fingerprint")),
-      root)
-  }
+      m: Int = 16, ksub: Int = 16): Long =
+    saveIndexWith(spark, build(spark, sfDir, m, ksub),
+      Map("meta" -> graft.sources.VersionedStore.metaTable(spark,
+        graft.Tables.fileFingerprint(spark, sfDir, "embeddings"))), root)
 
   /** Publish an EXPLICIT Index value — the path [[append]]'s result
     * ships on (the stream-maintained index publishes pinned-version-in
@@ -183,28 +172,15 @@ object IvfPq {
         "codebooks" -> PqIndex.codebooksTable(spark, ix.codebooks)) ++ extras,
       root)
 
-  private val published = new ConcurrentHashMap[(Int, String), Index]()
-
   /** The session's published-artifact index for a dataset (the
     * Bm25Index.loadOrPublish twin, same stale-fingerprint republish
     * rule): publish once per (session, dataset) under the JVM temp
     * root, then serve the LOADED index — x97's dense leg rides this.
     */
   def loadOrPublish(spark: SparkSession, sfDir: String): Index =
-    published.computeIfAbsent((System.identityHashCode(spark), sfDir), _ => {
-      val root = Bm25Index.artifactRoot("ivfpq", sfDir)
-      val want = graft.Tables.fileFingerprint(spark, sfDir, "embeddings")
-      val fresh =
-        try graft.sources.VersionedStore.latestVersion(root).exists(
-          graft.sources.VersionedStore.metaMatches(spark, root, _, want))
-        catch { case _: Exception => false }
-      if (!fresh)
-        // adoption re-verifies the rival's meta fingerprint (r12 advice)
-        graft.sources.VersionedStore.publishOrAdopt(root,
-          graft.sources.VersionedStore.metaMatches(spark, root, _, want))(
-          save(spark, sfDir, root))
-      load(spark, root)
-    })
+    Bm25Index.artifactMemo(spark, sfDir, "ivfpq",
+      graft.Tables.fileFingerprint(spark, sfDir, "embeddings"))(
+      (root, _) => save(spark, sfDir, root))(load(spark, _))
 
   /** Load a published index (latest snapshot, or a pinned `version`):
     * no k-means, no corpus scan — a fresh session probes immediately.
@@ -279,20 +255,5 @@ object IvfPq {
     val queries = embOf(spark, sfDir).filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     search(spark, sfDir, queries, nProbe, shortlist, topK)
-  }
-
-  /** Drop memoized indexes (Caches holds the coded frames). */
-  def clear(): Unit = { cache.clear(); published.clear() }
-
-  /** Drop only one dataset's memoized/published-index entries — the
-    * [[graft.Caches.clear]] hook (same rationale as Bm25Index.clear:
-    * after an eviction the memo must not serve unpersisted frames).
-    */
-  def clear(sfDir: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    cache.keySet().asScala.filter(_._2 == sfDir).toList
-      .foreach(cache.remove)
-    published.keySet().asScala.filter(_._2 == sfDir).toList
-      .foreach(published.remove)
   }
 }

@@ -236,6 +236,14 @@ object VersionedStore {
       .collect().headOption.exists(_.getString(0) == want)
     catch { case _: Exception => false }
 
+  /** The one-row `meta` table [[metaMatches]] reads: the source
+    * fingerprint an artifact version was built from.
+    */
+  def metaTable(spark: SparkSession, want: String): DataFrame = {
+    import spark.implicits._
+    Seq(want).toDF("fingerprint")
+  }
+
   /** Run a publish tolerating a concurrent publisher's `v=N` race
     * (round-11 advice: two JVM sessions on the same dataset share the
     * tmp-dir artifact root, and `errorifexists` makes the loser THROW
@@ -291,6 +299,22 @@ object VersionedStore {
         }
         throw e // unreachable; while(true) above always returns/throws
     }
+  }
+
+  /** Serve the artifact under `root` built from source state `want` —
+    * the one freshness-or-publish sequence every loadOrPublish shares.
+    * The latest version is reused when its `meta` records `want`;
+    * otherwise `publish` runs (and a lost race adopts the rival's
+    * version only if it too records `want`). Either way the served
+    * version comes back through `load`.
+    */
+  def loadFresh[V](spark: SparkSession, root: String, want: String)
+      (publish: => Long)(load: => V): V = {
+    val fresh =
+      try latestVersion(root).exists(metaMatches(spark, root, _, want))
+      catch { case _: Exception => false }
+    if (!fresh) publishOrAdopt(root, metaMatches(spark, root, _, want))(publish)
+    load
   }
 
   /** Read one named table of a pinned multi-table snapshot. */

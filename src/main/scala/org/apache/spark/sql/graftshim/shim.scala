@@ -33,3 +33,11 @@ object CheckpointShim {
       case _ => false
     }
 }
+
+/** The `private[sql]` per-session UUID: the identity session-bound
+  * memos key on (an identity hash can be reused by a later session).
+  */
+object SessionShim {
+  def id(spark: org.apache.spark.sql.SparkSession): String =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+}

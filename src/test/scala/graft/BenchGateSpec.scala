@@ -435,4 +435,25 @@ class BenchGateSpec extends AnyFunSuite {
     assert(root.get("bracket").get("watch").get("x003_q").asDouble() === 2.3)
     assert(!root.get("contended").asBoolean())
   }
+
+  test("artifact line escapes quotes and backslashes in keys and paths") {
+    // a query key or dataset path holding `"` or `\` used to be written
+    // raw, breaking the whole line for every reader
+    val key = "x001_\"q\\"
+    val dir = "C:\\data\\\"sf\" 0.1"
+    val line = Bench.artifactLine(
+      total = 1.0, queries = Seq(key -> 1.0), failed = Seq(key), sfDir = dir,
+      runs = 1, loadStart = 0.0, loadEnd = 0.0, stealPct = 0.0,
+      ledgerQueries = 0, medianRatio = -1.0, p90Ratio = -1.0,
+      cpuMedianRatio = -1.0, retried = Nil, suspect = Nil, watch = Seq(key),
+      familyWatch = Nil, epochVerdict = "none", bracketJson = "{}",
+      cold = Seq(key -> 2.0), coldWatch = Nil, cpu = Nil, coldCpu = Nil,
+      contended = false)
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(root.get("sf").asText() === dir)
+    assert(root.get("queries").get(key).asDouble() === 1.0)
+    assert(root.get("failed").get(0).asText() === key)
+    assert(root.get("watch").get(0).asText() === key)
+    assert(root.get("cold").get(key).asDouble() === 2.0)
+  }
 }

@@ -126,7 +126,6 @@ class Bm25IndexSpec extends AnyFunSuite with SparkSpec {
     fs.rename(new org.apache.hadoop.fs.Path(tmp2),
       new org.apache.hadoop.fs.Path(s"$dir/documents.parquet"))
     // drop the session memo (a fresh session's state) and re-resolve
-    Bm25Index.clear(dir)
     graft.Caches.clear(dir)
     val ix2 = Bm25Index.loadOrPublish(spark, dir)
     val v2 = graft.sources.VersionedStore
@@ -140,7 +139,7 @@ class Bm25IndexSpec extends AnyFunSuite with SparkSpec {
     assert(r2 === expect)
 
     // unchanged source: resolving again re-uses the artifact (no bump)
-    Bm25Index.clear(dir)
+    graft.Caches.clear(dir)
     Bm25Index.loadOrPublish(spark, dir)
     assert(graft.sources.VersionedStore
       .latestVersion(Bm25Index.artifactRoot("bm25", dir)).get === v2,

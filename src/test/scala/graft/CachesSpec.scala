@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -70,23 +71,23 @@ class CachesSpec extends AnyFunSuite with SparkSpec {
     import graft.queries.ExtensionQueries
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     ExtensionQueries.x79_bpe_train(spark, sf).collect()
-    assert(ExtensionQueries.bpeMemoized(sf), "x79 should populate the memo")
+    assert(Caches.memoized(sf, "bpe") > 0, "x79 should populate the memo")
     // the memo's encoded frame is a localCheckpoint — its blocks show
     // up as persistent RDDs the CacheManager does NOT track
     val rddsWithMemo = spark.sparkContext.getPersistentRDDs.keySet
     assert((rddsWithMemo -- rddsBefore).nonEmpty,
       "the BPE memo should hold checkpoint storage")
     Caches.clear(sf)
-    assert(!ExtensionQueries.bpeMemoized(sf), "clear must drop the BPE memo")
+    assert(Caches.memoized(sf, "bpe") == 0, "clear must drop the BPE memo")
     // release is REAL, not GC-deferred: the checkpoint RDDs introduced
     // by the memo are gone from persistent storage (Dataset.unpersist
     // would be a silent no-op here — the CheckpointShim pin)
     val rddsAfter = spark.sparkContext.getPersistentRDDs.keySet
     assert((rddsWithMemo -- rddsBefore -- rddsAfter).nonEmpty,
-      "clearBpe must unpersist the checkpointed frame's storage")
+      "clear must unpersist the checkpointed frame's storage")
     // transparent rebuild, identical answer (training is deterministic)
     val again = ExtensionQueries.x79_bpe_train(spark, sf).collect()
-    assert(ExtensionQueries.bpeMemoized(sf))
+    assert(Caches.memoized(sf, "bpe") > 0)
     assert(again.nonEmpty)
   }
 
@@ -104,13 +105,120 @@ class CachesSpec extends AnyFunSuite with SparkSpec {
     Caches.clearAll()
   }
 
-  test("IvfIndex.clear(sfDir) drops only that dataset's memoized index") {
+  test("Caches.clear(sfDir) drops the dataset's memoized IVF index") {
     val ixA = graft.ml.IvfIndex.build(spark, sf)
-    graft.ml.IvfIndex.clear(sf)
+    Caches.clear(sf)
     assert(ixA.assigned.storageLevel == StorageLevel.NONE)
     // a rebuild after clear is a fresh index, not the dropped memo
     val ixB = graft.ml.IvfIndex.build(spark, sf)
     assert(ixB ne ixA)
-    graft.ml.IvfIndex.clear(sf)
+    Caches.clear(sf)
+  }
+
+  /** One row per memo kind: the query that builds it, the memo's
+    * params, and the frames its value holds (empty for values that
+    * hold no storage of their own).
+    */
+  private case class MemoKind(kind: String, query: SparkSession => DataFrame,
+      params: Any = (), frames: Any => Seq[DataFrame] = _ => Nil)
+
+  private def memoKinds: Seq[MemoKind] = {
+    import graft.ml._
+    import ExtensionQueries._
+    def coded(v: Any) = Seq(v.asInstanceOf[IvfPq.Index].coded)
+    def checkpoint(v: Any) = Seq(v.asInstanceOf[DataFrame])
+    Seq(
+      MemoKind("ivf", x21_ann_ivf(_, sf), 16,
+        v => Seq(v.asInstanceOf[IvfIndex.Index].assigned)),
+      MemoKind("pq", x75_ann_pq(_, sf), (16, 16),
+        v => Seq(v.asInstanceOf[PqIndex.Index].codes)),
+      MemoKind("ivfpq", x76_ann_ivfpq(_, sf), (16, 16), coded),
+      MemoKind("bm25", x91_bm25(_, sf), frames = v =>
+        Seq(v.asInstanceOf[Bm25Index.Index].posting, v.asInstanceOf[Bm25Index.Index].df)),
+      MemoKind("bm25.published", x96_bm25_indexed(_, sf)),
+      MemoKind("bm25p.published", x124_passage_indexed(_, sf)),
+      MemoKind("ivfpq.published", x97_hybrid_indexed(_, sf), frames = coded),
+      MemoKind("whiten.published", x129_whiten(_, sf)),
+      MemoKind("whivf.published", x140_whiten_ivf(_, sf), frames = coded),
+      MemoKind("bitext.published", x145_bitext_mining_ann(_, sf), frames = v => {
+        val s = v.asInstanceOf[BitextAnn.Sides]
+        Seq(s.en.assigned, s.x.assigned)
+      }),
+      MemoKind("bpe", x79_bpe_train(_, sf),
+        frames = v => Seq(v.asInstanceOf[(Any, DataFrame)]._2)),
+      MemoKind("closure", x29_dup_clusters(_, sf), "x29", checkpoint),
+      MemoKind("marginGate", x144_bitext_mining(_, sf)))
+  }
+
+  /** The memo's value — a registry hit; a miss fails the build. */
+  private def memoValue(m: MemoKind): Any =
+    Caches.memo[Any](spark, m.kind, sf, m.params)(fail(s"${m.kind} not memoized"))(_ => ())
+
+  /** Whether a frame still holds storage: a checkpoint's RDD is in the
+    * persistent-RDD table, anything else has a storage level.
+    */
+  private def holdsStorage(df: DataFrame): Boolean = df.queryExecution.analyzed match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD =>
+      spark.sparkContext.getPersistentRDDs.contains(lr.rdd.id)
+    case _ => df.storageLevel != StorageLevel.NONE
+  }
+
+  test("clear(sfDir + \"/\") releases every memo kind and the rebuild is fresh") {
+    for (m <- memoKinds) withClue(s"[${m.kind}] ") {
+      m.query(spark).collect()
+      assert(Caches.memoized(sf, m.kind) == 1)
+      val before = memoValue(m)
+      val frames = m.frames(before)
+      assert(frames.forall(holdsStorage), "the memo should hold storage")
+      Caches.clear(sf + "/")
+      assert(Caches.memoized(sf, m.kind) == 0, "a trailing-slash clear must drop the memo")
+      assert(!frames.exists(holdsStorage), "the memo's frames must be released")
+      m.query(spark).collect()
+      assert(Caches.memoized(sf, m.kind) == 1)
+      if (frames.nonEmpty || !before.isInstanceOf[java.lang.Boolean])
+        assert(memoValue(m).asInstanceOf[AnyRef] ne before.asInstanceOf[AnyRef],
+          "the rebuild must not serve the released value")
+      Caches.clear(sf)
+    }
+  }
+
+  test("clear(sfDir) releases the artifact frames its published memos loaded") {
+    ExtensionQueries.x97_hybrid_indexed(spark, sf).collect()
+    ExtensionQueries.x145_bitext_mining_ann(spark, sf).collect()
+    val roots = Seq("ivfpq", "bitext").map(graft.ml.Bm25Index.artifactRoot(_, sf))
+    roots.foreach(r => assert(Caches.registered(r).nonEmpty, s"nothing loaded under $r"))
+    Caches.clear(sf)
+    roots.foreach(r => assert(Caches.registered(r).isEmpty, s"loaded frames outlive clear: $r"))
+  }
+
+  test("memos never cross sessions") {
+    val other = spark.newSession()
+    val mine = graft.ml.IvfIndex.build(spark, sf)
+    assert(graft.ml.IvfIndex.build(other, sf) ne mine)
+    ExtensionQueries.x79_bpe_train(spark, sf).collect()
+    ExtensionQueries.x79_bpe_train(other, sf).collect()
+    assert(Caches.memoized(sf, "ivf") == 2 && Caches.memoized(sf, "bpe") == 2,
+      "a second session must build its own memos")
+    Caches.clear(sf)
+    assert(Caches.memoized(sf, "ivf") == 0 && Caches.memoized(sf, "bpe") == 0)
+  }
+
+  test("source guard: no identity-hash keys, no memo map outside the registry") {
+    import java.io.File
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    def scalaFiles(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(scalaFiles)
+      else Seq(f).filter(_.getName.endsWith(".scala"))
+    // Metrics' map holds a listener's observed rows, not a session memo
+    val mapAllowed = Set("graft/Caches.scala", "graft/streaming/Metrics.scala")
+    val hits = scalaFiles(root).flatMap { f =>
+      val rel = root.toPath.relativize(f.toPath).toString
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      (if (src.contains("identityHashCode")) Seq(s"$rel: identityHashCode") else Nil) ++
+        (if (src.contains("ConcurrentHashMap") && !mapAllowed(rel))
+          Seq(s"$rel: ConcurrentHashMap") else Nil)
+    }
+    assert(hits.isEmpty, s"session memos must go through Caches.memo: ${hits.mkString(", ")}")
   }
 }

@@ -93,7 +93,7 @@ class EmbedQualitySpec extends AnyFunSuite with SparkSpec {
     // drop the session memo; the on-disk artifact must carry the
     // transform alone (the deployment contract: queries are whitened
     // with the index-time μ/W in a fresh session)
-    graft.ml.Whiten.clear(sf)
+    graft.Caches.clear(sf)
     val second = ExtensionQueries.whitenedOf(spark, sf).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
     assert(first == second,

@@ -49,7 +49,7 @@ class IvfRecallSpec extends AnyFunSuite with SparkSpec {
     assert(v === 0L)
 
     // drop the in-process memo entirely: the load path must stand alone
-    graft.ml.IvfIndex.clear(sf)
+    Caches.clear(sf)
     val loaded = graft.ml.IvfIndex.load(spark, root)
     val queries = loaded.assigned.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
@@ -73,7 +73,21 @@ class IvfRecallSpec extends AnyFunSuite with SparkSpec {
     assert(v2 === 1L)
     assert(graft.ml.IvfIndex.load(spark, root, Some(0L))
       .centroids.count() === loaded.centroids.count())
-    graft.ml.IvfIndex.clear(sf)
+    Caches.clear(sf)
     Caches.clear(root)
+  }
+
+  test("search rejects a top-avg window wider than topK") {
+    import org.apache.spark.sql.functions.col
+    val ix = graft.ml.IvfIndex.build(spark, sf)
+    val queries = ix.assigned.filter(col("vec_id") < 2)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"))
+    // the average is taken before the topK cut: a wider window would
+    // average neighbors the result never returns
+    intercept[IllegalArgumentException] {
+      graft.ml.IvfIndex.search(ix, queries, topK = 3, topAvgK = 4)
+    }
+    assert(graft.ml.IvfIndex.search(ix, queries, topK = 4, topAvgK = 4)
+      .columns.contains("topavg"))
   }
 }

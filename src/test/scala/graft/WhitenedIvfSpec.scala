@@ -68,8 +68,7 @@ class WhitenedIvfSpec extends AnyFunSuite with SparkSpec {
     // artifacts alone must serve the same answer (the deployment
     // contract: a fresh session whitens queries with the index-time
     // μ/W and probes the published index — no refit, no re-encode)
-    graft.ml.Whiten.clear(sf)
-    graft.ml.WhitenedIvf.clear(sf)
+    graft.Caches.clear(sf)
     val second = ExtensionQueries.x140_whiten_ivf(spark, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(first === second,
