@@ -4,8 +4,12 @@ import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
-/** Weighted-vector-sum input row: one (weight, vector) pair per token. */
-case class WeightedVec(w: Double, vec: Seq[Double])
+/** Weighted-vector-sum input row: one (weight, vector) pair per token.
+  * `vec` is an array so the encoder decodes it in one copy and `reduce`
+  * reads it by index in O(1); a `Seq` field decodes as a `List`, where
+  * every `vec(i)` walks from the head.
+  */
+case class WeightedVec(w: Double, vec: Array[Double])
 
 /** Per-group axpy aggregation: `doc_vector = Σ w_i · vec_i` (SURVEY.md A3).
   *

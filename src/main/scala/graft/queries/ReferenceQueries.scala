@@ -81,24 +81,6 @@ object ReferenceQueries {
 
   val SqlTokByLang: String = sqlTokByLangOf("text", "lang")
 
-  /** The (doc_id, token) posting table — the shared working set of every
-    * text query (tf, idf, vocab scan, simhash, lang-id, token stats…).
-    * Persisted: regex tokenization is the single most expensive scalar
-    * step, and Spark's CacheManager canonicalizes the plan so every query
-    * building this exact projection — including ExtensionQueries — reads
-    * one materialization instead of re-splitting the corpus. In a
-    * long-lived 100 TB deployment this is the materialized inverted-ish
-    * index a text engine would maintain anyway; MEMORY_AND_DISK degrades
-    * to spill, not OOM.
-    *
-    * `persist = false` exists for per-micro-batch callers (docVectors
-    * under the streaming vectorizer): each micro-batch has a fresh
-    * plan, so persisting would register a new never-unpersisted cache
-    * entry per trigger — an unbounded leak over a long-running stream.
-    * Batch queries still share the cache entries registered by the
-    * persisting callers (CacheManager matches by canonical plan, not by
-    * who called persist).
-    */
   /** Small-input parallelism guard for the tokenize-heavy posting
     * builders: a small-SF documents file is a single parquet ROW GROUP,
     * so the scan — and the regex tokenization riding on it, the most
@@ -121,6 +103,24 @@ object ReferenceQueries {
     else docs
   }
 
+  /** The (doc_id, token) posting table — the shared working set of every
+    * text query (tf, idf, vocab scan, simhash, lang-id, token stats…).
+    * Persisted: regex tokenization is the single most expensive scalar
+    * step, and Spark's CacheManager canonicalizes the plan so every query
+    * building this exact projection — including ExtensionQueries — reads
+    * one materialization instead of re-splitting the corpus. In a
+    * long-lived 100 TB deployment this is the materialized inverted-ish
+    * index a text engine would maintain anyway; MEMORY_AND_DISK degrades
+    * to spill, not OOM.
+    *
+    * `persist = false` exists for per-micro-batch callers (docVectors
+    * under the streaming vectorizer): each micro-batch has a fresh
+    * plan, so persisting would register a new never-unpersisted cache
+    * entry per trigger — an unbounded leak over a long-running stream.
+    * Batch queries still share the cache entries registered by the
+    * persisting callers (CacheManager matches by canonical plan, not by
+    * who called persist).
+    */
   private[graft] def docTokens(docs: DataFrame, persist: Boolean = true): DataFrame = {
     val tok = parallelized(docs)
       .select(col("doc_id"), explode(Tokenize.tokens(col("text"))).as("token"))
@@ -158,7 +158,7 @@ object ReferenceQueries {
   val VecDim = 8
 
   /** vec[d] = ((ascii(token[d % len]) * (d+1)) % 97) / 97.0 */
-  private def pseudoVec(token: Column): Column =
+  private[graft] def pseudoVec(token: Column): Column =
     transform(sequence(lit(0), lit(VecDim - 1)), d =>
       pmod(ascii(token.substr(pmod(d, length(token)) + 1, lit(1))) * (d + 1),
         lit(97)).cast("double") / 97.0)
@@ -795,27 +795,38 @@ object ReferenceQueries {
     * stacked into one (lang, token, idf, vec) frame. A language with
     * zero qualifying posts has no dimension rows — the reference would
     * not deploy a worker for it.
+    *
+    * Whether a post counts is a property of its own row
+    * (`n_chars >= 100`, NULL counts as no), so the flag rides through
+    * the tokenize `explode` and the whole dimension is one pass over
+    * the posts and one shuffle: vocabulary = the `(lang, token)` keys
+    * of length >= 4, occurrences = `count_if(post)` over the same
+    * group (0 for a token seen only in short posts). `n_posts` is the
+    * small broadcast per-language count; `min_raw` is a window over the
+    * vocabulary-sized aggregate.
+    *
+    * Precondition: `doc_id` is unique in `documents` (true at every
+    * testdata scale factor and for ScaleBlowup replicas). Under it this
+    * equals q32's oracle CTE `wv`, whose `occ` joins tokens to posts on
+    * `doc_id`; with a duplicated `doc_id` that join would also count a
+    * short row's tokens when its twin is long, and fan the counts out.
     */
   def wordvecsByLang(spark: SparkSession, sfDir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, sfDir)
-    val tok = parallelized(docs).select(col("doc_id"), col("lang"),
-      explode(Tokenize.tokensByLang(col("text"), col("lang"))).as("token"))
-    val vocab = tok.select("lang", "token").distinct()
+    val post = col("n_chars") >= 100
+    val tok = parallelized(docs).select(col("lang"), post.as("post"),
+        explode(Tokenize.tokensByLang(col("text"), col("lang"))).as("token"))
       .filter(length(col("token")) >= 4)
-    val posts = docs.filter(col("n_chars") >= 100).select("doc_id", "lang")
-    val nDf = posts.groupBy("lang").agg(count(lit(1)).cast("double").as("n_posts"))
-    val occ = tok.join(posts.select("doc_id"), Seq("doc_id"), "left_semi")
-      .groupBy("lang", "token").agg(count(lit(1)).as("c"))
-    val raw = vocab.join(occ, Seq("lang", "token"), "left")
-      .withColumn("occurrences", coalesce(col("c"), lit(0L)))
+    val nDf = docs.filter(post)
+      .groupBy("lang").agg(count(lit(1)).cast("double").as("n_posts"))
+    tok.groupBy("lang", "token").agg(count_if(col("post")).as("occurrences"))
       .join(broadcast(nDf), Seq("lang"))
       .withColumn("raw",
         when(col("occurrences") > 0, log10(col("n_posts") / col("occurrences")))
           .otherwise(lit(-1.0)))
-    val minDf = raw.groupBy("lang").agg(min(col("raw")).as("min_raw"))
-    raw.join(broadcast(minDf), Seq("lang"))
-      .withColumn("idf",
-        when(col("raw") > 0, col("raw")).otherwise(col("min_raw")))
+      .withColumn("idf", when(col("raw") > 0, col("raw"))
+        .otherwise(min(col("raw")).over(Window.partitionBy("lang"))))
       .withColumn("vec", pseudoVec(col("token")))
       .select("lang", "token", "idf", "vec")
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.ExtensionQueries
+import graft.queries.{ExtensionQueries, ReferenceQueries}
 import graft.streaming.EventStreams
 
 class StreamingSpec extends AnyFunSuite with SparkSpec {
@@ -114,5 +114,28 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val batch = ExtensionQueries.x11_event_windows(spark, sf)
       .collect().map(_.toSeq).toSet
     assert(streamed === batch)
+  }
+
+  test("docTokens over a streaming frame equals batch docTokens") {
+    // docTokens -> parallelized must leave a streaming frame as it is:
+    // a streaming frame has no .rdd to count partitions on
+    val src = sfDir("0.01")
+    val dir = java.nio.file.Files.createTempDirectory("graft_tok_stream")
+    java.nio.file.Files.createSymbolicLink(
+      dir.resolve("documents.parquet"),
+      java.nio.file.Paths.get(s"$src/documents.parquet"))
+    val docs = spark.readStream.schema(Tables.documents(spark, src).schema)
+      .parquet(dir.toString)
+    val q = ReferenceQueries.docTokens(docs, persist = false)
+      .writeStream.outputMode("append")
+      .format("memory").queryName("doc_tokens_out")
+      .trigger(Trigger.AvailableNow()).start()
+    q.quiesce()
+    val streamed = spark.table("doc_tokens_out")
+    val batch = ReferenceQueries.docTokens(Tables.documents(spark, src), persist = false)
+    assert(streamed.columns.toSeq === Seq("doc_id", "token"))
+    assert(streamed.count() === batch.count())
+    assert(streamed.exceptAll(batch).isEmpty)
+    assert(batch.exceptAll(streamed).isEmpty)
   }
 }
